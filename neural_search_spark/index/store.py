@@ -107,15 +107,20 @@ class IndexStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, "meta.json")) as f:
-            self.meta = json.load(f)
+        self._opened_epoch: tuple | None = None
+        self._handles: dict[str, DataFrame | None] = {}
         self._plan_cache: dict | None = None
+        self._open()
 
     def _epoch(self) -> tuple:
-        """Cheap invalidation key for session caches: (name, mtime, size)
-        of every stage manifest, tombstone file, and meta.json — anything
-        that changes the index (build stage rewrite, delete, compact,
-        streaming append) touches at least one of these."""
+        """Invalidation key for the table handles and the plan cache:
+        (name, mtime_ns, size) of every file under `_manifests/` and
+        `tombstones/`, plus meta.json. Every writer of this store touches at
+        least one of them: a build stage rewrite writes its manifest and
+        meta.json, `delete_docs` appends a tombstone file, `compact()`
+        removes the manifests and tombstones and rewrites meta.json.
+        `StreamingIndexer`'s `runs/` and `_state.json` are not read by
+        IndexStore, so they are not covered."""
         entries = []
         for sub in ("_manifests", "tombstones"):
             d = os.path.join(self.path, sub)
@@ -127,32 +132,64 @@ class IndexStore:
         entries.append(("meta.json", st.st_mtime_ns, st.st_size))
         return tuple(entries)
 
+    def _open(self) -> dict[str, DataFrame | None]:
+        """The current epoch's table handles — the point-in-time reader of
+        the Lucene analog. When _epoch() has changed since the last call,
+        meta.json is re-read and every handle and the plan cache are
+        dropped; within an epoch each table is read once, so a warm query
+        pays no parquet schema-inference job."""
+        epoch = self._epoch()
+        if epoch != self._opened_epoch:
+            with open(os.path.join(self.path, "meta.json")) as f:
+                self._meta = json.load(f)
+            self._handles = {}
+            self._plan_cache = None
+            self._opened_epoch = epoch
+        return self._handles
+
+    @property
+    def meta(self) -> dict:
+        """{N, avgdl, tokenizer_hash, codec_version, source_fingerprint} of
+        the current epoch."""
+        self._open()
+        return self._meta
+
+    def _meta_frame(self) -> DataFrame:
+        """(N, avgdl) as a one-row VALUES relation: it plans to a local
+        relation, so reading it back (`meta.first()`) runs no Spark job.
+        repr() round-trips the double exactly."""
+        m = self.meta
+        return self.spark.sql(
+            f"SELECT * FROM VALUES ({int(m['N'])}L, CAST('{float(m['avgdl'])!r}' AS DOUBLE))"
+            " AS t(N, avgdl)"
+        )
+
+    def _table(self, stage: str) -> DataFrame:
+        handles = self._open()
+        df = handles.get(stage)
+        if df is None:
+            df = handles[stage] = self.spark.read.parquet(os.path.join(self.path, stage))
+        return df
+
     def plan_cache(self, zone_width: int = 1024, wide_cap: int = 64) -> dict | None:
         """Session-cached per-term block-metadata aggregate — exactly what
         segment_search.wand_topk's "job A" computes per query, built ONCE
         per index epoch over ALL terms so every warm query skips the
-        metadata job (2-3 jobs → 1-2). Adds per-term compressed payload
-        bytes, which the auto-router's cost model uses as the decode-volume
-        estimate. Invalidated whenever _epoch() changes (delete/compact/
-        rebuild/append). Returns None when the vocabulary exceeds
-        PLAN_CACHE_MAX_TERMS: at 10⁸-term scale the right cache is the
-        per-query filtered aggregate (bounded by |q|), not a driver dict.
+        metadata job. Adds per-term compressed payload bytes, which the
+        auto-router's cost model uses as the decode-volume estimate.
+        Invalidated whenever _epoch() changes (delete/compact/rebuild).
+        topk() builds it for strategy='auto' only. Returns None when the
+        vocabulary exceeds PLAN_CACHE_MAX_TERMS: at 10⁸-term scale the
+        right cache is the per-query filtered aggregate (bounded by |q|),
+        not a driver dict.
         """
-        epoch = self._epoch()
+        self._open()  # drops a cache of an older epoch
         c = self._plan_cache
-        if (
-            c is not None
-            and c["epoch"] == epoch
-            and c["zone_width"] == zone_width
-            and c["wide_cap"] == wide_cap
-        ):
+        if c is not None and c["zone_width"] == zone_width and c["wide_cap"] == wide_cap:
             return c if c.get("terms") is not None else None
         n_terms = self.term_stats.count()
         if n_terms > self.PLAN_CACHE_MAX_TERMS:
-            self._plan_cache = {
-                "epoch": epoch, "zone_width": zone_width,
-                "wide_cap": wide_cap, "terms": None,
-            }
+            self._plan_cache = {"zone_width": zone_width, "wide_cap": wide_cap, "terms": None}
             return None
         zlo = (F.col("first_docID") / zone_width).cast("long")
         zhi = (F.col("last_docID") / zone_width).cast("long")
@@ -174,7 +211,6 @@ class IndexStore:
             .collect()
         )
         self._plan_cache = {
-            "epoch": epoch,
             "zone_width": zone_width,
             "wide_cap": wide_cap,
             "terms": {
@@ -191,26 +227,26 @@ class IndexStore:
         }
         return self._plan_cache
 
-    # --- open-time accessors (lazy scans; segments scan prunes by shard) --
+    # --- table handles (lazy scans, one per epoch; segments prune by shard)
     @property
     def docs(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "docs"))
+        return self._table("docs")
 
     @property
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "postings"))
+        return self._table("postings")
 
     @property
     def doclens(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "doclens"))
+        return self._table("doclens")
 
     @property
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "term_stats"))
+        return self._table("term_stats")
 
     @property
     def segments(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "segments"))
+        return self._table("segments")
 
     # --- deletes: Lucene liveDocs semantics -------------------------------
     # deleted docs are tombstoned, excluded from results immediately, but
@@ -226,12 +262,14 @@ class IndexStore:
     @property
     def tombstones(self) -> DataFrame | None:
         """(docID) frame of deleted docs, or None when nothing is deleted."""
-        p = self._tombstone_path
-        if not os.path.isdir(p) or not any(
-            f.endswith(".parquet") for f in os.listdir(p)
-        ):
-            return None
-        return self.spark.read.parquet(p).select("docID").distinct()
+        handles = self._open()
+        if "tombstones" not in handles:
+            p = self._tombstone_path
+            live = os.path.isdir(p) and any(f.endswith(".parquet") for f in os.listdir(p))
+            handles["tombstones"] = (
+                self.spark.read.parquet(p).select("docID").distinct() if live else None
+            )
+        return handles["tombstones"]
 
     def delete_docs(self, doc_ids) -> int:
         """Tombstone docs by id list or (docID) DataFrame; idempotent
@@ -287,6 +325,9 @@ class IndexStore:
             old = os.path.join(self.path, stage)
             shutil.rmtree(old, ignore_errors=True)
             os.replace(tmp, old)
+            # the epoch only moves when compact() ends: drop the stale
+            # handle now so later stages read the rewritten files
+            self._handles.pop(stage, None)
 
         live_postings = self.postings.join(tombs, "docID", "left_anti")
         swap("postings", live_postings)
@@ -302,9 +343,7 @@ class IndexStore:
             pdl, avgdl=avgdl, max_doc_id=max(n_docs - 1, 0), term_stats=self.term_stats
         ).withColumn("shard", shard_col(F.col("term")))
         swap("segments", segs, shard=True)
-        self.meta.update({"N": n_docs, "avgdl": avgdl})
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump(self.meta, f, indent=2, sort_keys=True)
+        _write_json(os.path.join(self.path, "meta.json"), {**self.meta, "N": n_docs, "avgdl": avgdl})
         shutil.rmtree(self._tombstone_path, ignore_errors=True)
         shutil.rmtree(os.path.join(self.path, "_manifests"), ignore_errors=True)
         tombs.unpersist()
@@ -317,10 +356,15 @@ class IndexStore:
     # relational scans the postings parquet (~16 B/posting) plus a doclens
     # join (~12 B/doc) JVM-side. Engaging the θ/zone prune machinery costs
     # extra jobs (seed decode + zone agg) — the measured ~3 s penalty that
-    # made head-only queries lose on the segment path (§4 head1).
-    ROUTER_SEG_FIXED_S = 0.30        # 2-job early-exit floor
-    ROUTER_SEG_PRUNE_FIXED_S = 3.50  # 3-4-job prune-path floor (θ seed + zones)
-    ROUTER_REL_FIXED_S = 1.00        # scan+shuffle+agg single-job floor
+    # made head-only queries lose on the segment path (§4 head1). Job
+    # counts per warm query, measured on the 2,000-turn benchmark corpus
+    # at local[2] on a 4-CPU host (AQE runs one job per shuffle stage;
+    # planning runs none on the early exit and the relational path):
+    # early exit 2, relational 4, prune path 18 + 1. The constants
+    # predate these counts and are kept as calibrated.
+    ROUTER_SEG_FIXED_S = 0.30        # early-exit floor
+    ROUTER_SEG_PRUNE_FIXED_S = 3.50  # prune-path floor (θ seed + zones)
+    ROUTER_REL_FIXED_S = 1.00        # scan + shuffle + aggregate floor
     ROUTER_SEG_BPS = 150e6           # Arrow-kernel decode throughput
     ROUTER_REL_BPS = 1.5e9           # JVM codegen scan throughput
 
@@ -360,18 +404,16 @@ class IndexStore:
             # liveDocs semantics) until compact() clears the tombstones
             from neural_search_spark.query.bm25 import bm25_score_all, topk as _topk
 
-            meta = self.spark.createDataFrame(
-                [(self.meta["N"], self.meta["avgdl"])], "N long, avgdl double"
-            )
             scored = bm25_score_all(
-                self.postings, self.doclens, self.term_stats, meta, terms,
+                self.postings, self.doclens, self.term_stats, self._meta_frame(), terms,
                 exclude=tombs,
             )
             return _topk(scored, k)
         plan_cache = None
-        if strategy in ("auto", "segments"):
-            plan_cache = self.plan_cache()
         if strategy == "auto":
+            # the full-vocabulary cache serves the router; a forced
+            # 'segments' call runs wand's own job A bounded by |query|
+            plan_cache = self.plan_cache()
             q_terms = sorted(set(terms))
             if plan_cache is not None:
                 ct = plan_cache["terms"]
@@ -414,10 +456,9 @@ class IndexStore:
         if strategy == "relational":
             from neural_search_spark.query.bm25 import bm25_topk
 
-            meta = self.spark.createDataFrame(
-                [(self.meta["N"], self.meta["avgdl"])], "N long, avgdl double"
+            return bm25_topk(
+                self.postings, self.doclens, self.term_stats, self._meta_frame(), terms, k=k
             )
-            return bm25_topk(self.postings, self.doclens, self.term_stats, meta, terms, k=k)
         return wand_topk(
             self.segments,
             self.term_stats,
@@ -434,27 +475,31 @@ class IndexStore:
         """Bridge to the full query DSL: a QueryEngine over the store's
         persisted tables (match/term/bool/hybrid/span_near/synonym/
         more_like_this/aggs/… all work against the on-disk index).
-        Tombstones, if any, ride in as a DSL-level exclusion the caller
-        applies via store.topk for BM25; the DSL engine itself reflects
-        deletes only after compact() (documented: one engine, one stats
-        epoch). `positional=True` additionally builds positional postings
-        from the stored docs (needed by match_phrase/span_near)."""
+        Tombstoned docs are anti-joined out of postings, doclens and docs,
+        while term_stats and meta stay whole-index — the same liveDocs
+        semantics as topk(). The engine is a snapshot of the current epoch:
+        build a new one after delete_docs/compact/rebuild. `positional=True`
+        additionally builds positional postings from the stored docs
+        (needed by match_phrase/span_near)."""
         from neural_search_spark.index.build import IndexTables
         from neural_search_spark.query.dsl import QueryEngine
 
-        meta = self.spark.createDataFrame(
-            [(self.meta["N"], self.meta["avgdl"])], "N long, avgdl double"
-        )
+        postings, doclens, docs = self.postings, self.doclens, self.docs
+        tombs = self.tombstones
+        if tombs is not None:
+            postings = postings.join(tombs, "docID", "left_anti")
+            doclens = doclens.join(tombs, "docID", "left_anti")
+            docs = docs.join(tombs, "docID", "left_anti")
         tables = IndexTables(
-            postings=self.postings, doclens=self.doclens,
-            term_stats=self.term_stats, meta=meta,
+            postings=postings, doclens=doclens,
+            term_stats=self.term_stats, meta=self._meta_frame(),
         )
         pos = None
         if positional:
             from neural_search_spark.query.phrase import build_positional_postings
 
-            pos = build_positional_postings(self.docs)
-        return QueryEngine(tables=tables, docs=self.docs, positional=pos, **kwargs)
+            pos = build_positional_postings(docs)
+        return QueryEngine(tables=tables, docs=docs, positional=pos, **kwargs)
 
     def stats(self) -> dict:
         """Index telemetry — the _stats / _segments API analog: doc count,
@@ -492,8 +537,15 @@ class IndexStore:
     def fetch(self, topk: DataFrame) -> DataFrame:
         """Join top-k hits back to the source turns (fetch phase — reference
         NormalizationProcessorWorkflow.java:180-229); the k-row side is
-        broadcast, never the corpus."""
-        return self.docs.join(F.broadcast(topk), "docID").orderBy("rank")
+        broadcast, never the corpus. The ≤k joined rows are ordered inside
+        one partition rather than by a global sort, which would add a
+        range-partition sample job and a shuffle of its own; the docs scan
+        itself stays parallel."""
+        return (
+            self.docs.join(F.broadcast(topk), "docID")
+            .repartition(1)
+            .sortWithinPartitions("rank")
+        )
 
     # --- snapshot / restore (the _snapshot API analog) --------------------
 
@@ -542,7 +594,7 @@ class IndexStore:
                     rel in prior_md5
                     and os.path.exists(dst)
                     and os.path.getsize(dst) == size
-                    and abs(os.stat(dst).st_mtime - st.st_mtime) < 1e-6
+                    and os.stat(dst).st_mtime_ns == st.st_mtime_ns
                 ):
                     skipped += 1
                     digest = prior_md5[rel]
@@ -615,12 +667,19 @@ def _read_manifest(out_dir: str, stage: str) -> dict | None:
         return json.load(f)
 
 
-def _write_manifest(out_dir: str, stage: str, payload: dict) -> None:
-    os.makedirs(os.path.join(out_dir, "_manifests"), exist_ok=True)
-    tmp = _manifest_path(out_dir, stage) + ".tmp"
+def _write_json(path: str, payload: dict) -> None:
+    """Write a temp file, then rename it over `path` (atomic commit): an
+    open IndexStore re-reads meta.json when the epoch moves and must never
+    see a half-written file."""
+    tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(payload, f, indent=2, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_dir, stage))  # atomic commit
+    os.replace(tmp, path)
+
+
+def _write_manifest(out_dir: str, stage: str, payload: dict) -> None:
+    os.makedirs(os.path.join(out_dir, "_manifests"), exist_ok=True)
+    _write_json(_manifest_path(out_dir, stage), payload)
 
 
 def build_index(
@@ -730,17 +789,14 @@ def build_index(
     r, _ = run_stage("segments", produce_segments, [c_docs, c_post, c_dl, c_ts])
     results.append(r)
 
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "N": n_docs,
-                "avgdl": avgdl,
-                "tokenizer_hash": tokenizer_hash(),
-                "codec_version": CODEC_VERSION,
-                "source_fingerprint": source_fingerprint,
-            },
-            f,
-            indent=2,
-            sort_keys=True,
-        )
+    _write_json(
+        os.path.join(out_dir, "meta.json"),
+        {
+            "N": n_docs,
+            "avgdl": avgdl,
+            "tokenizer_hash": tokenizer_hash(),
+            "codec_version": CODEC_VERSION,
+            "source_fingerprint": source_fingerprint,
+        },
+    )
     return results

@@ -1932,6 +1932,12 @@ class QueryEngine:
                 # float32 — coarser than 6dp — so this is closer to
                 # reference behavior than double-ULP ordering).
                 dec = body.get("score_decimals")
+                if dec is not None and (
+                    isinstance(dec, bool) or not isinstance(dec, int) or dec < 0
+                ):
+                    raise QueryValidationError(
+                        f"top_hits score_decimals must be a non-negative integer, got {dec!r}"
+                    )
                 scored_all = self._score(query, None, k=k)
                 meta_cols = self.docs.select(
                     F.col(self.id_col).alias("docID"), F.col(group_by).alias("key")

@@ -136,30 +136,36 @@ def wand_topk(
     filled with pruning telemetry: total/surviving block counts and the
     seeded θ.
 
-    Fixed-floor design (the part that dominates at query time): the whole
-    plan runs in THREE Spark jobs — (A) one tiny aggregate over the
-    persisted block metadata that yields per-term df (Σ n over the term's
-    blocks — exact, no term_stats scan), total block count, per-term
-    global max (the MAXSCORE UB_t) and the wide-block gmax constants in a
-    single collect; (B) the θ-seed decode+top-k; (C) the final
-    prune→decode→score→top-k. Shard partition values are computed
-    driver-side (segments.shard_of, a pure-Python XXH64) — no Spark job.
-    When the query's total block count is ≤ `no_prune_blocks`, the θ/zone
-    machinery is skipped entirely and the blocks are decoded outright
-    (2 jobs) — pruning a handful of blocks costs more in job latency than
-    the decode it saves. When the MAXSCORE split activates (≥1
-    non-essential term) a fourth job materializes the candidate docIDs
-    for the kernel filter (≤ `cand_limit` int64s to the driver; above
-    that the distributed semi-join fallback keeps 3 jobs and never
-    collects candidates). `term_stats` is accepted for API compatibility
-    but never scanned.
+    Fixed-floor design (the part that dominates at query time). Job
+    counts below were measured on the 2,000-turn benchmark corpus at
+    local[2] on a 4-CPU host; AQE submits one Spark job per shuffle
+    stage.
+    - This call runs no job on the early exit: shard partition values are
+      computed driver-side (segments.shard_of, a pure-Python XXH64) and
+      the query weights ride in as a literal term → w_idf map, not a join.
+    - Early exit: when the query's total block count is ≤
+      `no_prune_blocks`, the θ/zone machinery is skipped and the blocks
+      are decoded outright; collecting the result runs 2 jobs (decode +
+      partial aggregate, then final aggregate + top-k). Pruning a handful
+      of blocks costs more in job latency than the decode it saves.
+    - Job A, only without a usable `plan_cache`: one aggregate over the
+      block metadata yields per-term df (Σ n over the term's blocks —
+      exact, no term_stats scan), block counts, the per-term global max
+      (the MAXSCORE UB_t) and the wide-block gmax constants in a single
+      collect.
+    - Prune path: the θ-seed decode + top-k, the candidate collect when
+      the MAXSCORE split activates (≥1 non-essential term; ≤ `cand_limit`
+      int64s to the driver, above that the distributed semi-join fallback
+      never collects candidates), and the final prune → decode → score →
+      top-k all run inside this call: 18 jobs measured for 2-4-term
+      head-heavy queries, plus 1 to collect the k result rows.
+    `term_stats` is accepted for API compatibility but never scanned.
 
     `plan_cache` (optional, from IndexStore.plan_cache()): a per-term
     snapshot of exactly what job A aggregates ({term: {df, nblocks,
     nwide, wide_max, tmax, …}}, plus the zone_width/wide_cap it was built
-    at). When present and parameter-compatible, job A is skipped entirely
-    — warm queries drop to 1-2 jobs (the round-5 interactive-latency
-    lever). A cache built at different zone parameters is ignored."""
+    at). When present and parameter-compatible, job A is skipped entirely.
+    A cache built at different zone parameters is ignored."""
     import time as _time
 
     spark = segments.sparkSession
@@ -184,10 +190,12 @@ def wand_topk(
         scan_filter = scan_filter & F.col("shard").isin(shard_vals)
     segments = segments.where(scan_filter)
 
-    # only the metadata columns are persisted — the compressed payloads are
-    # re-read lazily by whichever decode actually runs
+    # only the metadata columns are persisted, and only when two jobs read
+    # them (a plan-cache miss's job A, the θ/zone prune path) — the
+    # compressed payloads are re-read lazily by whichever decode runs
     meta_cols = ["term", "salt", "blockID", "first_docID", "last_docID", "n", "max_score_component"]
-    qmeta = segments.select(*meta_cols).persist()
+    qmeta = segments.select(*meta_cols)
+    persisted = False
     try:
         zlo_c = (F.col("first_docID") / zone_width).cast("long")
         zhi_c = (F.col("last_docID") / zone_width).cast("long")
@@ -205,6 +213,7 @@ def wand_topk(
             ct = plan_cache["terms"]
             agg_rows = [dict(ct[t], term=t) for t in q_terms if t in ct]
         else:
+            qmeta, persisted = qmeta.persist(), True
             # job A: df per term (exact: each posting sits in exactly one
             # block of its term), block counts, and the wide-block max
             # score component — ONE collect replaces the old df-lookup
@@ -243,12 +252,12 @@ def wand_topk(
         # rounded UP into float32 at build time, so UB_t is a true bound)
         ub = {r["term"]: w_idf[r["term"]] * float(r["tmax"]) for r in agg_rows if r["term"] in w_idf}
 
-        widf_df = F.broadcast(
-            spark.createDataFrame(
-                [(t, w) for t, w in sorted(w_idf.items())], "term string, w_idf double"
-            )
-        )
-        qblocks = segments.join(widf_df, "term").withColumn(
+        # w_idf rides into the plan as a literal term → w_idf map: a join
+        # against a 1-3-row relation would cost a broadcast job of its own.
+        # Every scanned term has an entry (the scan filter keeps q_terms, and
+        # a q_term without blocks has no rows to look up).
+        widf_of = _literal_map(w_idf)
+        qblocks = segments.withColumn("w_idf", widf_of[F.col("term")]).withColumn(
             "ub", F.col("w_idf") * F.col("max_score_component")
         )
 
@@ -277,6 +286,8 @@ def wand_topk(
         # to the full scan it saves. One block (the classic seed) puts θ at
         # ~the 92nd percentile of the score distribution — too weak to
         # prune anything; 32 blocks of tf-heavy docs put it near the top.
+        if not persisted:
+            qmeta, persisted = qmeta.persist(), True
         w_seed = Window.partitionBy("term").orderBy(F.col("ub").desc(), F.col("blockID").asc())
         seed_set = qblocks.withColumn("_r", F.row_number().over(w_seed)).where(
             F.col("_r") <= seed_blocks
@@ -330,11 +341,10 @@ def wand_topk(
         # decoded, and their per-term max enters every zone's bound via
         # the constant G. default zone_width 1024 ≈ 8 head-term blocks per
         # zone. gmax/UB were already computed driver-side in job A; qmeta
-        # re-derives per-block ub by the broadcast w_idf join
+        # re-derives per-block ub through the literal w_idf map
         # (metadata-only rows — payloads never enter the zone machinery)
         classified = (
-            qmeta.join(widf_df, "term")
-            .withColumn("ub", F.col("w_idf") * F.col("max_score_component"))
+            qmeta.withColumn("ub", widf_of[F.col("term")] * F.col("max_score_component"))
             .withColumn("_zlo", zlo_c)
             .withColumn("_zhi", zhi_c)
             .withColumn("_wide", (F.col("_zhi") - F.col("_zlo")) >= wide_cap)
@@ -343,16 +353,12 @@ def wand_topk(
         wide = cls_e.where(F.col("_wide"))
         narrow = cls_e.where(~F.col("_wide"))
         g_const_e = sum(v for t, v in gmax.items() if t not in ne_set)
-        gmax_df = F.broadcast(
-            spark.createDataFrame(
-                [(t, gmax.get(t, 0.0)) for t in e_terms], "term string, gmx double"
-            )
-        )
+        gmx_of = _literal_map({t: gmax.get(t, 0.0) for t in e_terms})
         zstats = (
             narrow.select("term", F.explode(F.sequence("_zlo", "_zhi")).alias("zone"), "ub")
             .groupBy("term", "zone")
             .agg(F.max("ub").alias("zmax"))
-            .join(gmax_df, "term")
+            .withColumn("gmx", gmx_of[F.col("term")])
             # Σ_t max(zmax, gmx) = G + Σ_present max(zmax − gmx, 0); terms
             # with no narrow block in the zone contribute exactly gmx via G
             .groupBy("zone")
@@ -521,7 +527,16 @@ def wand_topk(
             )
         return spark.createDataFrame(rows, "rank int, docID long, score double")
     finally:
-        qmeta.unpersist()
+        if persisted:
+            qmeta.unpersist()
+
+
+def _literal_map(values: dict[str, float]):
+    """A map<string, double> literal column over `values` (sorted keys, so
+    equal inputs give the same plan)."""
+    return F.create_map(
+        *[c for t in sorted(values) for c in (F.lit(t), F.lit(float(values[t])))]
+    )
 
 
 def _ranked(scores: DataFrame, k: int) -> DataFrame:

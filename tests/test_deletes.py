@@ -7,10 +7,14 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from neural_search_spark.data import synthesize_transcripts
 from neural_search_spark.index.store import IndexStore, build_index
+from tests import oracle
 
 QUERY = ["the", "data", "spark"]
+HIT_SCHEMA = "rank int, docID long, score double"
 
 
 def _build(spark, path, n_convs=12):
@@ -108,3 +112,91 @@ def test_store_query_engine_bridge(spark, tmp_path):
         {"match": {"text": "data"}}, {"by_role": {"terms": {"field": "role"}}}
     )
     assert aggs["by_role"].count() > 0
+
+
+def _docs_on_disk(spark, path) -> dict[int, str]:
+    """docID → text read straight from the docs parquet, not through a
+    store handle."""
+    docs = spark.read.parquet(os.path.join(path, "docs"))
+    return {r["docID"]: r["text"] for r in docs.select("docID", "text").collect()}
+
+
+def _assert_agrees_with_oracle(store, docs, deleted=()):
+    """Every read path of `store` returns the oracle's top-5 over `docs`,
+    with stats over all of `docs` and the `deleted` docs excluded."""
+    scores = oracle.bm25_scores(docs, QUERY)
+    exp = oracle.topk({d: s for d, s in scores.items() if d not in deleted}, 5)
+    exp_ids = [d for d, _ in exp]
+    for strategy in ("segments", "relational", "auto"):
+        got = store.topk(QUERY, k=5, strategy=strategy).collect()
+        assert [r["docID"] for r in got] == exp_ids, strategy
+        assert [r["score"] for r in got] == pytest.approx([s for _, s in exp], rel=1e-9)
+    fetched = store.fetch(store.topk(QUERY, k=5)).collect()
+    assert [(r["docID"], r["text"]) for r in fetched] == [(d, docs[d]) for d in exp_ids]
+    eng = store.query_engine()
+    got = eng.search({"match": {"text": " ".join(QUERY)}}, k=5).collect()
+    assert [r["docID"] for r in got] == exp_ids
+    assert [r["score"] for r in got] == pytest.approx([s for _, s in exp], rel=1e-9)
+
+
+def test_table_handles_reused_within_epoch(spark, tmp_path):
+    store = _build(spark, str(tmp_path / "idx"), n_convs=8)
+    for table in ("docs", "postings", "doclens", "term_stats", "segments"):
+        assert getattr(store, table) is getattr(store, table), table
+    assert store.meta is store.meta
+    assert store.tombstones is None
+    segments = store.segments
+    store.delete_docs([0])
+    # a delete moves the epoch: every handle is reopened, then reused
+    assert store.segments is not segments
+    assert store.segments is store.segments
+    tombs = store.tombstones
+    assert tombs is not None and store.tombstones is tombs
+
+
+def test_same_store_follows_delete_compact_rebuild(spark, tmp_path):
+    """One IndexStore instance, kept open across every writer of its path,
+    reads the files each writer left behind."""
+    path = str(tmp_path / "idx")
+    store = _build(spark, path)
+    docs = _docs_on_disk(spark, path)
+    _assert_agrees_with_oracle(store, docs)
+
+    # deleting the current top hits changes every path's answer
+    victims = [d for d, _ in oracle.topk(oracle.bm25_scores(docs, QUERY), 2)]
+    assert store.delete_docs(victims) == 2
+    _assert_agrees_with_oracle(store, docs, deleted=victims)
+
+    store.compact()
+    docs = _docs_on_disk(spark, path)
+    assert set(victims).isdisjoint(docs) and store.meta["N"] == len(docs)
+    _assert_agrees_with_oracle(store, docs)
+
+    tr = synthesize_transcripts(spark, n_convs=9, turns_per_conv=6, seed=11)
+    build_index(spark, tr, path, source_fingerprint="synth:9x6:11",
+                postings_per_salt=50, resume=False)
+    docs = _docs_on_disk(spark, path)
+    assert store.meta["N"] == len(docs) == 54
+    _assert_agrees_with_oracle(store, docs)
+
+
+def test_fetch_returns_rank_order_across_docs_files(spark, tmp_path):
+    path = str(tmp_path / "idx")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "16")
+    try:
+        store = _build(spark, path)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    files = [f for f in os.listdir(os.path.join(path, "docs")) if f.endswith(".parquet")]
+    assert len(files) > 1, files
+    docs = _docs_on_disk(spark, path)
+    # ranks run against docID order, so hits from different files (and
+    # scan partitions) must be re-ordered by fetch
+    ids = sorted(docs)
+    picks = [ids[-1], ids[len(ids) // 2], ids[0], ids[len(ids) // 3]]
+    hits = spark.createDataFrame(
+        [(rank, d, 10.0 - rank) for rank, d in enumerate(picks, 1)], HIT_SCHEMA
+    )
+    fetched = store.fetch(hits).collect()
+    assert [r["rank"] for r in fetched] == [1, 2, 3, 4]
+    assert [(r["docID"], r["text"]) for r in fetched] == [(d, docs[d]) for d in picks]

@@ -71,3 +71,21 @@ def test_dsl_never_leaks_raw_errors(fuzz_engine):
     # a soft budget: malformed input should overwhelmingly map to the
     # validation error; raw leaks indicate missing parse guards
     assert not leaks, leaks[:5]
+
+
+@pytest.mark.parametrize("dec", ["6", 1.5, 6.0, -1, True, [6], {"v": 6}])
+def test_top_hits_score_decimals_rejects_non_integers(fuzz_engine, dec):
+    with pytest.raises(QueryValidationError, match="score_decimals"):
+        fuzz_engine.search_with_aggs(
+            {"match": {"text": "alpha"}},
+            {"best": {"top_hits": {"group_by": "text", "score_decimals": dec}}},
+        )
+
+
+def test_top_hits_score_decimals_accepts_non_negative_integers(fuzz_engine):
+    for dec in (0, 6):
+        _, aggs = fuzz_engine.search_with_aggs(
+            {"match": {"text": "alpha"}},
+            {"best": {"top_hits": {"group_by": "text", "size": 1, "score_decimals": dec}}},
+        )
+        assert aggs["best"].count() == len(DOCS)

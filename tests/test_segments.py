@@ -386,3 +386,50 @@ def test_store_snapshot_and_restore(spark, tmp_path):
     with pytest.raises(ValueError, match="incomplete"):
         IndexStore.restore(spark, sdir, str(tmp_path / "idx_restored2"))
     assert not _os.path.exists(str(tmp_path / "idx_restored2"))
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group of
+    its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_search_job_budget(spark, tmp_path):
+    """A warm search on the segment early-exit path: building the plan
+    (topk) runs no job, scoring runs at most two (decode + aggregate), and
+    fetching the hits at most three (hits broadcast, docs scan + join,
+    single-partition sort) — no schema inference, no join for the query
+    weights, no global sort."""
+    from neural_search_spark.data import synthesize_transcripts
+
+    tr = synthesize_transcripts(spark, n_convs=15, turns_per_conv=8, seed=42)
+    out = str(tmp_path / "idx")
+    build_index(spark, tr, out, source_fingerprint="budget", postings_per_salt=50)
+    store = IndexStore(spark, out)
+    store.plan_cache()
+    terms = ["the", "data", "spark"]
+    hit_schema = "rank int, docID long, score double"
+    for _ in range(2):  # the second search is warm
+        stats: dict = {}
+        df, topk_jobs = _jobs_run_by(spark, lambda: store.topk(terms, k=5, stats_out=stats))
+        rows, collect_jobs = _jobs_run_by(spark, df.collect)
+        hits = spark.createDataFrame(
+            [(r["rank"], r["docID"], r["score"]) for r in rows], hit_schema
+        )
+        fetched, fetch_jobs = _jobs_run_by(spark, lambda: store.fetch(hits).collect())
+    assert stats["router"]["strategy"] == "segments" and stats["plan_cache_hit"]
+    assert stats["pruning_skipped"]
+    jobs = {"topk": topk_jobs, "collect": collect_jobs, "fetch": fetch_jobs}
+    assert topk_jobs == 0 and collect_jobs <= 2 and fetch_jobs <= 3, jobs
+    assert [r["docID"] for r in fetched] == [r["docID"] for r in rows]
