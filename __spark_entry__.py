@@ -311,7 +311,7 @@ def q_bm25_batch_top5(spark, sf_dir):
     one (query_id, docID) exchange (query/batch.py bm25_topk_batch); the
     reference would run these as separate requests. Ranks on the rounded
     score like every other ranked entry (fp-tie robustness vs DuckDB)."""
-    from neural_search_spark.query.batch import bm25_score_batch, per_query_topk
+    from neural_search_spark.query.batch import bm25_score_batch
 
     t = _index(spark, sf_dir)
     rows = [
@@ -324,7 +324,7 @@ def q_bm25_batch_top5(spark, sf_dir):
     scores = scores.withColumnRenamed("docID", "doc_id").withColumn(
         "score", F.round("score", 6)
     )
-    ranked = per_query_topk(scores.withColumnRenamed("doc_id", "docID"), k=5)
+    ranked = bm25.per_key_topk(scores.withColumnRenamed("doc_id", "docID"), 5, "query_id")
     return ranked.select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
@@ -350,7 +350,7 @@ def q_sparse_batch_top5(spark, sf_dir):
     """Per-query sparse top-5 for a batch of neural_sparse queries in ONE
     doc-weight pass (query/batch.py sparse_score_batch) — the offline
     eval / bulk-re-scoring shape for sparse retrieval."""
-    from neural_search_spark.query.batch import per_query_topk, sparse_score_batch
+    from neural_search_spark.query.batch import sparse_score_batch
 
     t = _index(spark, sf_dir)
     weights = t.postings.select("term", "docID", F.col("tf").cast("double").alias("weight"))
@@ -363,7 +363,7 @@ def q_sparse_batch_top5(spark, sf_dir):
     scores = sparse_score_batch(weights, queries, quantize=False).withColumn(
         "score", F.round("score", 6)
     )
-    return per_query_topk(scores, k=5).select(
+    return bm25.per_key_topk(scores, 5, "query_id").select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
         F.col("docID").alias("doc_id"),
@@ -378,7 +378,7 @@ def q_hybrid_batch_top5(spark, sf_dir):
     normalize/combine pipeline runs keyed by (query_id, subquery_idx).
     Sub-scores rounded to 6dp pre-top-k so both engines bound and
     normalize identical inputs (same parity rule as the single hybrids)."""
-    from neural_search_spark.query.batch import fused_subquery_scores_batch, per_query_topk
+    from neural_search_spark.query.batch import fused_subquery_scores_batch
 
     t = _index(spark, sf_dir)
     rows = [
@@ -392,14 +392,14 @@ def q_hybrid_batch_top5(spark, sf_dir):
     )
     fused = fused_subquery_scores_batch(t.postings, t.doclens, t.term_stats, t.meta, queries)
     rounded = fused.withColumn("score", F.round("score", 6))
-    bounded = per_query_topk(rounded, K, key=["query_id", "subquery_idx"]).drop("rank")
+    bounded = bm25.per_key_topk(rounded, K, ["query_id", "subquery_idx"]).drop("rank")
     normalized = hybrid.normalize_scores(
         bounded, "min_max", partition_cols=("query_id", "subquery_idx")
     )
     combined = hybrid.combine_scores(
         normalized, 2, "arithmetic_mean", group_cols=("query_id", "docID")
     ).withColumn("score", F.round("score", 6))
-    return per_query_topk(combined, k=5).select(
+    return bm25.per_key_topk(combined, 5, "query_id").select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
         F.col("docID").alias("doc_id"),
@@ -411,7 +411,7 @@ def q_hybrid_rrf_batch_top5(spark, sf_dir):
     """Per-query RRF fusion for the same hybrid batch: ranks computed over
     each sub-query's rounded bounded list, Σ 1/(60+rank) per doc — one
     postings scan for the whole batch."""
-    from neural_search_spark.query.batch import fused_subquery_scores_batch, per_query_topk
+    from neural_search_spark.query.batch import fused_subquery_scores_batch
 
     t = _index(spark, sf_dir)
     rows = [
@@ -425,12 +425,12 @@ def q_hybrid_rrf_batch_top5(spark, sf_dir):
     )
     fused = fused_subquery_scores_batch(t.postings, t.doclens, t.term_stats, t.meta, queries)
     rounded = fused.withColumn("score", F.round("score", 6))
-    bounded = per_query_topk(rounded, K, key=["query_id", "subquery_idx"]).drop("rank")
+    bounded = bm25.per_key_topk(rounded, K, ["query_id", "subquery_idx"]).drop("rank")
     combined = hybrid.rrf_combine(
         bounded, 2, group_cols=("query_id", "docID"),
         partition_cols=("query_id", "subquery_idx"),
     ).withColumn("score", F.round("score", 6))
-    return per_query_topk(combined, k=5).select(
+    return bm25.per_key_topk(combined, 5, "query_id").select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
         F.col("docID").alias("doc_id"),
@@ -448,7 +448,7 @@ def q_rank_eval_batch(spark, sf_dir):
     and broadcast; metrics are one groupBy on query_id — the corpus is
     touched only by the retrieval scan."""
     from neural_search_spark.ops.rank_eval import rank_eval
-    from neural_search_spark.query.batch import bm25_score_batch, per_query_topk
+    from neural_search_spark.query.batch import bm25_score_batch
 
     t = _index(spark, sf_dir)
     rows = [
@@ -458,7 +458,7 @@ def q_rank_eval_batch(spark, sf_dir):
     ]
     queries = spark.createDataFrame(rows, "query_id long, term string, weight double")
     scores = bm25_score_batch(t.postings, t.doclens, t.term_stats, t.meta, queries)
-    run = per_query_topk(scores.withColumn("score", F.round("score", 6)), k=5)
+    run = bm25.per_key_topk(scores.withColumn("score", F.round("score", 6)), 5, "query_id")
     judged = (
         _docs(spark, sf_dir)
         .where(F.col("doc_id") % QREL_MOD == 0)
@@ -678,7 +678,7 @@ def _hybrid(spark, sf_dir, normalization, combination):
     t = _index(spark, sf_dir)
     fused = hybrid.fused_bm25_subquery_scores(t, [Q_HY_A, Q_HY_B])
     rounded = fused.withColumn("score", F.round("score", 6))
-    bounded = hybrid.per_subquery_topk(rounded, K)
+    bounded = bm25.per_key_topk(rounded, K, "subquery_idx")
     normalized = hybrid.normalize_scores(bounded, normalization)
     combined = hybrid.combine_scores(normalized, 2, combination)
     return _ranked(combined.withColumnRenamed("docID", "doc_id"), "score", "doc_id", K)
@@ -704,7 +704,7 @@ def q_hybrid_rrf_top10(spark, sf_dir):
     t = _index(spark, sf_dir)
     fused = hybrid.fused_bm25_subquery_scores(t, [Q_HY_A, Q_HY_B])
     rounded = fused.withColumn("score", F.round("score", 6))
-    bounded = hybrid.per_subquery_topk(rounded, K)
+    bounded = bm25.per_key_topk(rounded, K, "subquery_idx")
     combined = hybrid.rrf_combine(bounded, 2, rank_constant=60)
     return _ranked(
         combined.withColumn("score", F.round("score", 6)).withColumnRenamed(
@@ -731,7 +731,7 @@ def q_hybrid_sorted_top10(spark, sf_dir):
     rounded = fused.withColumn("score", F.round("score", 6))
     meta = docs.select(F.col("doc_id").alias("docID"), "n_chars")
     order = [F.col("n_chars").desc(), F.col("docID").asc()]
-    bounded = hybrid.per_subquery_topk(rounded.join(meta, "docID"), K, order=order)
+    bounded = bm25.per_key_topk(rounded.join(meta, "docID"), K, "subquery_idx", order=order)
     normalized = hybrid.normalize_scores(
         bounded.select("subquery_idx", "docID", "score"), "min_max"
     )
@@ -2844,9 +2844,8 @@ def q_bm25_deleted_top10(spark, sf_dir):
     tombs = _docs(spark, sf_dir).where(
         F.col("doc_id") % DELETE_MOD == 0
     ).select(F.col("doc_id").alias("docID"))
-    scored = bm25.bm25_score_all(
-        idx.postings, idx.doclens, idx.term_stats, idx.meta, Q_BM25, exclude=tombs
-    )
+    live = idx.postings.join(tombs, "docID", "left_anti")
+    scored = bm25.bm25_score_all(live, idx.doclens, idx.term_stats, idx.meta, Q_BM25)
     return _ranked(scored.withColumnRenamed("docID", "doc_id"), "score", "doc_id", K)
 
 

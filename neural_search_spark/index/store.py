@@ -394,21 +394,13 @@ class IndexStore:
 
         if strategy not in ("auto", "segments", "relational"):
             raise ValueError(f"unknown strategy: {strategy}")
-        tombs = self.tombstones
-        if tombs is not None:
+        if self.tombstones is not None:
             # tombstones present: the segment path's θ seed would be
             # computed from decoded candidates that may be deleted, and a
             # θ inflated by a deleted doc can prune blocks holding LIVE
-            # top-k docs — route to the relational path with an anti-join
-            # on the matched postings (stats stay whole-index, Lucene
-            # liveDocs semantics) until compact() clears the tombstones
-            from neural_search_spark.query.bm25 import bm25_score_all, topk as _topk
-
-            scored = bm25_score_all(
-                self.postings, self.doclens, self.term_stats, self._meta_frame(), terms,
-                exclude=tombs,
-            )
-            return _topk(scored, k)
+            # top-k docs — route to the relational path over the live
+            # tables until compact() clears the tombstones
+            strategy = "relational"
         plan_cache = None
         if strategy == "auto":
             # the full-vocabulary cache serves the router; a forced
@@ -456,8 +448,9 @@ class IndexStore:
         if strategy == "relational":
             from neural_search_spark.query.bm25 import bm25_topk
 
+            postings, doclens, _ = self._live_tables()
             return bm25_topk(
-                self.postings, self.doclens, self.term_stats, self._meta_frame(), terms, k=k
+                postings, doclens, self.term_stats, self._meta_frame(), terms, k=k
             )
         return wand_topk(
             self.segments,
@@ -470,6 +463,19 @@ class IndexStore:
             stats_out=stats_out,
             plan_cache=plan_cache,
         )
+
+    def _live_tables(self) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """(postings, doclens, docs) without the tombstoned docs — the one
+        place deletes are applied for every relational read. term_stats
+        and meta stay whole-index until compact(): Lucene liveDocs
+        semantics (docFreq ignores deletes until segments merge). The
+        anti-join sits on the postings scan, below the query's term IN
+        filter, which Catalyst pushes through it into the parquet scan."""
+        tables = (self.postings, self.doclens, self.docs)
+        tombs = self.tombstones
+        if tombs is None:
+            return tables
+        return tuple(t.join(tombs, "docID", "left_anti") for t in tables)
 
     def query_engine(self, positional: bool = False, **kwargs):
         """Bridge to the full query DSL: a QueryEngine over the store's
@@ -484,12 +490,7 @@ class IndexStore:
         from neural_search_spark.index.build import IndexTables
         from neural_search_spark.query.dsl import QueryEngine
 
-        postings, doclens, docs = self.postings, self.doclens, self.docs
-        tombs = self.tombstones
-        if tombs is not None:
-            postings = postings.join(tombs, "docID", "left_anti")
-            doclens = doclens.join(tombs, "docID", "left_anti")
-            docs = docs.join(tombs, "docID", "left_anti")
+        postings, doclens, docs = self._live_tables()
         tables = IndexTables(
             postings=postings, doclens=doclens,
             term_stats=self.term_stats, meta=self._meta_frame(),

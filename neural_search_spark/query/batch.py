@@ -12,58 +12,26 @@ per-query execution would re-scan the postings once per query.
 
 Plan shape (one scan, two shuffles, both keyed on data that fans OUT
 rather than replicates the corpus):
-  queries(query_id, term, weight) ⋈ term_stats        -> w_idf per (q, t)
-  postings ⋈ matched-terms (broadcast when small,
-             shuffle-hash on `term` when the query set is huge)
+  bm25.bm25_parts(keys=query_id): queries(query_id, term, weight)
+             ⋈ term_stats -> w_idf per (q, t); postings ⋈ matched-terms
+             (broadcast when small, shuffle-hash on `term` when the query
+             set is huge)
   groupBy (query_id, docID) sum                       -> exact scores
-  two-level per-query top-k (bounded heaps per partition, then
-             coordinator-scale final rank — never a global sort)
+  bm25.per_key_topk: two-level per-query top-k (bounded heaps per
+             partition, then coordinator-scale final rank — never a
+             global sort)
 
-Scoring is identical to query/bm25.py (Lucene BM25Similarity defaults,
+Scoring is query/bm25.py's one primitive (Lucene BM25Similarity defaults,
 k1 = 1.2, b = 0.75, tie-break score desc / docID asc —
 processor/combination/ScoreCombiner.java:37-50).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neural_search_spark import B, K1
-from neural_search_spark.query.bm25 import bm25_score_col, idf_col
-
-# below this many distinct query terms, the term list is collected to the
-# driver and pushed into the parquet scan as an IN-list (row-group skipping);
-# above it the scan is a full pass — correct for huge query batches, where
-# the batch's vocabulary approaches the corpus vocabulary anyway
-MAX_INLIST_TERMS = 10_000
-
-
-def per_query_topk(
-    scores: DataFrame, k: int, key: str | list[str] = "query_id"
-) -> DataFrame:
-    """Bound each query's result list to its own top-k (score desc, docID
-    asc within `key` — a column name or a list of them, e.g.
-    [query_id, subquery_idx] for batch hybrid) with the two-level window:
-    level 1 ranks within each (key, spark partition) and keeps ≤ k rows per
-    partition, level 2 ranks the ≤ n_partitions·k survivors per query. No
-    per-query global sort; a head query over 10¹² docs never funnels its
-    full match set through one reducer."""
-    keys = [key] if isinstance(key, str) else list(key)
-    order = [F.col("score").desc(), F.col("docID").asc()]
-    w_local = Window.partitionBy(*keys, "_pid").orderBy(*order)
-    local = (
-        scores.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_r", F.row_number().over(w_local))
-        .where(F.col("_r") <= k)
-        .drop("_pid")
-    )
-    w_global = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        local.withColumn("_r", F.row_number().over(w_global))
-        .where(F.col("_r") <= k)
-        .withColumnRenamed("_r", "rank")
-    )
+from neural_search_spark.query.bm25 import _inlist_pruned, bm25_parts, per_key_topk
 
 
 def bm25_score_batch(
@@ -72,42 +40,15 @@ def bm25_score_batch(
     term_stats: DataFrame,
     meta: DataFrame,
     queries: DataFrame,
-    k1: float = K1,
-    b: float = B,
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """(query_id, docID, score) for EVERY matching (query, doc) pair.
 
     `queries` is (query_id, term, weight) — one row per query term; any
-    number of queries. `broadcast_queries` forces/forbids broadcasting the
-    matched-terms frame into the postings join; default (None) lets
-    Catalyst/AQE decide from its size estimate, which picks broadcast for
-    eval-set-sized batches and a shuffle-hash join on `term` for huge ones.
-    """
-    m = meta.first()
-    n_docs, avgdl = m["N"], float(m["avgdl"])
-    q = queries.select(
-        "query_id", F.col("term").alias("q_term"), F.col("weight").cast("double").alias("q_weight")
-    )
-    scored_terms = q.join(term_stats, q.q_term == term_stats.term).select(
-        "query_id",
-        "term",
-        (F.col("q_weight") * idf_col(F.col("df"), F.lit(n_docs))).alias("w_idf"),
-    )
-    cand = _inlist_pruned(postings, q.select(F.col("q_term").alias("term")))
-    if broadcast_queries is True:
-        scored_terms = F.broadcast(scored_terms)
-    elif broadcast_queries is False:
-        # an explicit shuffle-hash hint, not just the absence of the
-        # broadcast hint — Catalyst/AQE would otherwise still auto-broadcast
-        # a small matched-terms frame
-        scored_terms = scored_terms.hint("shuffle_hash")
-    cand = cand.join(scored_terms, "term")
-    if "dl" not in cand.columns:
-        cand = cand.join(doclens, "docID")
-    part = F.col("w_idf") * bm25_score_col(F.col("tf"), F.col("dl"), F.lit(avgdl), k1, b)
+    number of queries. Catalyst/AQE picks the matched-terms join from its
+    size estimate: broadcast for eval-set-sized batches, a shuffle-hash
+    join on `term` for huge ones."""
     return (
-        cand.select("query_id", "docID", part.alias("part"))
+        bm25_parts(postings, doclens, term_stats, meta, queries, keys=("query_id",))
         .groupBy("query_id", "docID")
         .agg(F.sum("part").alias("score"))
     )
@@ -120,31 +61,11 @@ def bm25_topk_batch(
     meta: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """(query_id, rank, docID, score) — per-query top-k over the whole
     query batch in one postings pass."""
-    scores = bm25_score_batch(
-        postings, doclens, term_stats, meta, queries, k1, b, broadcast_queries
-    )
-    return per_query_topk(scores, k).select("query_id", "rank", "docID", "score")
-
-
-def _inlist_pruned(table: DataFrame, queries: DataFrame, term_col: str = "term") -> DataFrame:
-    """Push the batch's distinct terms into the scan as a literal IN-list
-    when the vocabulary is small enough for row-group skipping (a broadcast
-    join does not push build-side keys into the probe scan); above
-    MAX_INLIST_TERMS the scan stays full — correct for huge batches whose
-    vocabulary approaches the corpus vocabulary anyway."""
-    distinct_terms = [
-        r[term_col]
-        for r in queries.select(term_col).distinct().limit(MAX_INLIST_TERMS + 1).collect()
-    ]
-    if len(distinct_terms) <= MAX_INLIST_TERMS:
-        return table.where(F.col(term_col).isin(sorted(distinct_terms)))
-    return table
+    scores = bm25_score_batch(postings, doclens, term_stats, meta, queries)
+    return per_key_topk(scores, k, "query_id").select("query_id", "rank", "docID", "score")
 
 
 def sparse_score_batch(
@@ -187,7 +108,7 @@ def sparse_topk_batch(
     """(query_id, rank, docID, score) — per-query sparse top-k over the
     batch in one doc-weight pass."""
     scores = sparse_score_batch(doc_weights, queries, weight_col, quantize)
-    return per_query_topk(scores, k).select("query_id", "rank", "docID", "score")
+    return per_key_topk(scores, k, "query_id").select("query_id", "rank", "docID", "score")
 
 
 def fused_subquery_scores_batch(
@@ -196,37 +117,18 @@ def fused_subquery_scores_batch(
     term_stats: DataFrame,
     meta: DataFrame,
     queries: DataFrame,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """(query_id, subquery_idx, docID, score): every BM25 sub-query of every
     hybrid query in a batch, scored in ONE postings pass.
 
     `queries` is (query_id, subquery_idx, term, weight). The batch analog of
-    hybrid.fused_bm25_subquery_scores — the (subquery_idx, term, w_idf)
-    relation just grows a query_id column; the scan and the
-    (query_id, subquery_idx, docID) exchange stay single."""
-    m = meta.first()
-    n_docs, avgdl = m["N"], float(m["avgdl"])
-    q = queries.select(
-        "query_id",
-        "subquery_idx",
-        F.col("term").alias("q_term"),
-        F.col("weight").cast("double").alias("q_weight"),
-    )
-    scored_terms = q.join(term_stats, q.q_term == term_stats.term).select(
-        "query_id",
-        "subquery_idx",
-        "term",
-        (F.col("q_weight") * idf_col(F.col("df"), F.lit(n_docs))).alias("w_idf"),
-    )
-    cand = _inlist_pruned(postings, queries).join(scored_terms, "term")
-    if "dl" not in cand.columns:
-        cand = cand.join(doclens, "docID")
-    part = F.col("w_idf") * bm25_score_col(F.col("tf"), F.col("dl"), F.lit(avgdl), k1, b)
+    hybrid.fused_bm25_subquery_scores — the term relation just grows a
+    query_id key; the scan and the (query_id, subquery_idx, docID) exchange
+    stay single."""
+    keys = ("query_id", "subquery_idx")
     return (
-        cand.select("query_id", "subquery_idx", "docID", part.alias("part"))
-        .groupBy("query_id", "subquery_idx", "docID")
+        bm25_parts(postings, doclens, term_stats, meta, queries, keys=keys)
+        .groupBy(*keys, "docID")
         .agg(F.sum("part").alias("score"))
     )
 
@@ -243,8 +145,6 @@ def hybrid_topk_batch(
     combination: str = "arithmetic_mean",
     weights: list[float] | None = None,
     subquery_k: int | None = None,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """(query_id, rank, docID, score) — per-query hybrid top-k for a batch
     of hybrid queries, one postings scan total.
@@ -261,11 +161,9 @@ def hybrid_topk_batch(
         rrf_combine,
     )
 
-    scores = fused_subquery_scores_batch(
-        postings, doclens, term_stats, meta, queries, k1, b
-    )
-    bounded = per_query_topk(
-        scores, subquery_k or k, key=["query_id", "subquery_idx"]
+    scores = fused_subquery_scores_batch(postings, doclens, term_stats, meta, queries)
+    bounded = per_key_topk(
+        scores, subquery_k or k, ["query_id", "subquery_idx"]
     ).drop("rank")
     if combination == "rrf":
         # rank fusion skips score normalization by construction
@@ -282,4 +180,4 @@ def hybrid_topk_batch(
             normalized, n_subqueries, combination, weights,
             group_cols=("query_id", "docID"),
         )
-    return per_query_topk(combined, k).select("query_id", "rank", "docID", "score")
+    return per_key_topk(combined, k, "query_id").select("query_id", "rank", "docID", "score")

@@ -39,8 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neural_search_spark import B, K1
-from neural_search_spark.query.bm25 import bm25_score_col, idf_col
+from neural_search_spark.query.bm25 import bm25_parts
 
 MAX_BOOL_CLAUSES = 63  # single int64 bitmask; Lucene's own cap is 1024
 
@@ -65,8 +64,6 @@ def fused_bool_scores(
     must_not_weights: list[dict[str, float]],
     min_should_match: int = 0,
     prefilter: DataFrame | None = None,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """(docID, score) for an all-lexical bool query in ONE postings scan.
 
@@ -98,29 +95,11 @@ def fused_bool_scores(
     if not mask:
         return postings.sparkSession.createDataFrame([], "docID long, score double")
 
-    spark = postings.sparkSession
     qrows = [(t, weight.get(t, 0.0), mask[t]) for t in sorted(mask)]
-    q = spark.createDataFrame(qrows, "q_term string, q_weight double, q_mask long")
-
-    m = meta.first()
-    n_docs, avgdl = m["N"], float(m["avgdl"])
-    scored_terms = q.join(term_stats, q.q_term == term_stats.term).select(
-        "term",
-        "q_mask",
-        (F.col("q_weight") * idf_col(F.col("df"), F.lit(n_docs))).alias("w_idf"),
-    )
-    # literal IN-list before the join → parquet In-pushdown (see bm25.py)
-    cand = postings.where(F.col("term").isin(sorted(mask))).join(
-        F.broadcast(scored_terms), "term"
-    )
-    if prefilter is not None:
-        cand = cand.join(prefilter.select("docID"), "docID", "left_semi")
-    per_doc = cand.select(
-        "docID",
-        "q_mask",
-        (F.col("w_idf") * bm25_score_col(F.col("tf"), F.col("dl"), F.lit(avgdl), k1, b)).alias(
-            "part"
-        ),
+    q = postings.sparkSession.createDataFrame(qrows, "term string, weight double, q_mask long")
+    per_doc = bm25_parts(
+        postings, doclens, term_stats, meta, q, carry=("q_mask",),
+        inlist=sorted(mask), prefilter=prefilter,
     ).groupBy("docID").agg(
         F.sum("part").alias("score"), F.bit_or("q_mask").alias("mask")
     )

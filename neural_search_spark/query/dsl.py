@@ -92,7 +92,7 @@ from pyspark.sql import functions as F
 from neural_search_spark.analysis.tokenizer import tokenize_py
 from neural_search_spark.index.build import IndexTables
 from neural_search_spark.query import hybrid as hybrid_mod
-from neural_search_spark.query.bm25 import bm25_score_all, topk
+from neural_search_spark.query.bm25 import bm25_score_all, per_key_topk, topk
 from neural_search_spark.query.boolquery import (
     MAX_BOOL_CLAUSES,
     compose_bool_scores,
@@ -214,15 +214,7 @@ class QueryEngine:
         wrong-typed values is a PARSE error, never a raw KeyError/
         TypeError/AttributeError escaping to the caller (pinned by
         tests/test_dsl_fuzz.py)."""
-        if not isinstance(q, dict) or len(q) != 1:
-            raise QueryValidationError(
-                f"query dict must have exactly one key, got {sorted(q) if isinstance(q, dict) else type(q).__name__}"
-            )
-        (kind,) = q.keys()
-        if not isinstance(q[kind], dict):
-            raise QueryValidationError(
-                f"{kind} query body must be an object, got {type(q[kind]).__name__}"
-            )
+        kind = self._query_kind(q)
         try:
             return self._score_inner(q, prefilter, in_hybrid, k)
         except QueryValidationError:
@@ -1036,7 +1028,8 @@ class QueryEngine:
     def _lexical_weights(sub: dict) -> dict[str, float] | None:
         """If `sub` is a plain lexical query (match/term, no bool wrapper),
         its BM25 term-weight dict; else None. Used to route all-lexical
-        hybrids through the single-scan fused scorer."""
+        hybrids, dis_max, bools and msearch batches through the
+        single-scan scorer."""
         (kind,) = sub.keys()
         body = sub[kind]
         if kind == "match":
@@ -1128,7 +1121,9 @@ class QueryEngine:
                 "docID",
                 "score",
             )
-            per.append(fused if by_sort else hybrid_mod.per_subquery_topk(fused, sub_k))
+            per.append(
+                fused if by_sort else per_key_topk(fused, sub_k, "subquery_idx").drop("rank")
+            )
             rest = [(idx, sub) for idx, sub in enumerate(subs) if lex[idx][1] is None]
         else:
             rest = list(enumerate(subs))
@@ -1152,7 +1147,7 @@ class QueryEngine:
         order = [
             (F.col(c).desc() if d == "desc" else F.col(c).asc()) for c, d in sort
         ] + [F.col("docID").asc()]
-        return hybrid_mod.per_subquery_topk(joined, sub_k, order=order).select(
+        return per_key_topk(joined, sub_k, "subquery_idx", order=order).select(
             "subquery_idx", "docID", "score"
         )
 
@@ -1358,8 +1353,9 @@ class QueryEngine:
         """Multi-search — the _msearch API analog, returning
         (query_id, rank, docID, score) for the whole request list.
 
-        Routing: when EVERY query is a plain lexical match/term (no
-        minimum_should_match / filter), the batch compiles to ONE postings
+        Routing: when EVERY query is a plain lexical match/term (the
+        `_lexical_weights` shape: no filter, minimum_should_match ≤ 1, at
+        least one term), the batch compiles to ONE postings
         scan via query/batch.py (the 8×-amortization path — §5 of
         BENCH.md); anything else falls back to per-query search() unioned
         with its query_id, which is what the reference does for every
@@ -1367,25 +1363,13 @@ class QueryEngine:
         if not queries:
             raise QueryValidationError("msearch needs at least one query")
 
-        def lexical_weights(q: dict) -> dict[str, float] | None:
-            if len(q) != 1:
-                return None
-            (kind,) = q.keys()
-            body = q[kind]
+        def lexical_weights(q) -> dict[str, float] | None:
+            # a malformed or empty entry takes the per-query path below,
+            # whose search() raises the QueryValidationError
             try:
-                if kind == "match":
-                    _, spec = _single_field(body, "match")
-                    if "minimum_should_match" in spec:
-                        return None
-                    boost = float(spec.get("boost", 1.0))
-                    toks = Counter(tokenize_py(spec["query"]))
-                    return {t: float(m) * boost for t, m in toks.items()} or None
-                if kind == "term":
-                    _, spec = _single_field(body, "term")
-                    return {str(spec["value"]): float(spec.get("boost", 1.0))}
-            except (KeyError, QueryValidationError, TypeError, ValueError):
+                return self._lexical_weights(q) or None
+            except (AttributeError, KeyError, QueryValidationError, TypeError, ValueError):
                 return None
-            return None
 
         parsed = [lexical_weights(q) for q in queries]
         if all(p is not None for p in parsed):

@@ -49,7 +49,6 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neural_search_spark import B, K1
 from neural_search_spark.analysis.tokenizer import tokenize_col
 from neural_search_spark.query.bm25 import bm25_score_col
 
@@ -202,8 +201,6 @@ def phrase_scores(
     meta: DataFrame,
     terms: list[str],
     boost: float = 1.0,
-    k1: float = K1,
-    b: float = B,
     prefilter: DataFrame | None = None,
 ) -> DataFrame:
     """(docID, score) for every doc containing the exact phrase.
@@ -234,7 +231,7 @@ def phrase_scores(
         "docID",
         (
             F.lit(float(boost) * sum_idf)
-            * bm25_score_col(F.col("ptf").cast("double"), F.col("dl"), F.lit(avgdl), k1, b)
+            * bm25_score_col(F.col("ptf").cast("double"), F.col("dl"), F.lit(avgdl))
         ).alias("score"),
     )
 
@@ -253,8 +250,6 @@ def phrase_prefix_scores(
     terms: list[str],
     max_expansions: int = MAX_EXPANSIONS,
     boost: float = 1.0,
-    k1: float = K1,
-    b: float = B,
     prefilter: DataFrame | None = None,
 ) -> DataFrame:
     """match_phrase_prefix (Lucene MultiPhraseQuery after the prefix
@@ -324,7 +319,7 @@ def phrase_prefix_scores(
         "docID",
         (
             F.lit(float(boost) * sum_idf)
-            * bm25_score_col(F.col("ptf").cast("double"), F.col("dl"), F.lit(avgdl), k1, b)
+            * bm25_score_col(F.col("ptf").cast("double"), F.col("dl"), F.lit(avgdl))
         ).alias("score"),
     )
 
@@ -439,8 +434,6 @@ def span_near_scores(
     slop: int = 0,
     in_order: bool = True,
     boost: float = 1.0,
-    k1: float = K1,
-    b: float = B,
     prefilter: DataFrame | None = None,
 ) -> DataFrame:
     """(docID, score) for every doc matching the span-near window; scored
@@ -463,7 +456,7 @@ def span_near_scores(
         "docID",
         (
             F.lit(float(boost) * sum_idf)
-            * bm25_score_col(F.col("sntf").cast("double"), F.col("dl"), F.lit(avgdl), k1, b)
+            * bm25_score_col(F.col("sntf").cast("double"), F.col("dl"), F.lit(avgdl))
         ).alias("score"),
     )
 

@@ -72,7 +72,7 @@ _DECODED_SCHEMA = T.StructType(
 )
 
 def _decode_and_score(
-    blocks: DataFrame, avgdl: float, k1: float, b: float, cand_bc=None
+    blocks: DataFrame, avgdl: float, cand_bc=None
 ) -> DataFrame:
     """blocks: (term, w_idf, n, docids, tfs, dls) → (docID, part) partial
     scores, decoded+scored in one vectorized pass per Arrow batch.
@@ -105,7 +105,7 @@ def _decode_and_score(
             w_idf = batch["w_idf"].to_numpy(np.float64)[block_idx]
             tf = tfs.astype(np.float64)
             dl = dls.astype(np.float64)
-            part = w_idf * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+            part = w_idf * (tf / (tf + K1 * (1.0 - B + B * dl / avgdl)))
             yield pd.DataFrame({"docID": docids.astype(np.int64), "part": part})
 
     return blocks.mapInPandas(run, schema=_DECODED_SCHEMA)
@@ -118,8 +118,6 @@ def wand_topk(
     avgdl: float,
     terms: dict[str, float] | list[str],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     prune: bool = True,
     seed_blocks: int = 32,
     zone_width: int = 1024,
@@ -263,7 +261,7 @@ def wand_topk(
 
         if not prune or n_total <= no_prune_blocks:
             scored = _decode_and_score(
-                qblocks.select("term", "w_idf", "n", "docids", "tfs", "dls"), avgdl, k1, b
+                qblocks.select("term", "w_idf", "n", "docids", "tfs", "dls"), avgdl
             )
             if stats_out is not None:
                 stats_out.update(
@@ -294,7 +292,7 @@ def wand_topk(
         )
         _t0 = _time.time()
         seed_scores = (
-            _decode_and_score(seed_set.select("term", "w_idf", "n", "docids", "tfs", "dls"), avgdl, k1, b)
+            _decode_and_score(seed_set.select("term", "w_idf", "n", "docids", "tfs", "dls"), avgdl)
             .groupBy("docID")
             .agg(F.sum("part").alias("score"))
             .orderBy(F.col("score").desc(), F.col("docID").asc())
@@ -378,7 +376,7 @@ def wand_topk(
         decode_set = qblocks.join(keep_keys, ["term", "salt", "blockID"], "left_semi")
 
         e_parts = _decode_and_score(
-            decode_set.select("term", "w_idf", "n", "docids", "tfs", "dls"), avgdl, k1, b
+            decode_set.select("term", "w_idf", "n", "docids", "tfs", "dls"), avgdl
         )
         cand_mode = None
         n_cand = 0
@@ -434,7 +432,7 @@ def wand_topk(
                     ne_decode = qblocks.join(ne_keys, ["term", "salt", "blockID"], "left_semi")
                     ne_parts = _decode_and_score(
                         ne_decode.select("term", "w_idf", "n", "docids", "tfs", "dls"),
-                        avgdl, k1, b, cand_bc=cand_bc,
+                        avgdl, cand_bc=cand_bc,
                     )
                     # every NE row is a candidate; every output doc carries
                     # ≥1 essential part, so candidacy needs no flag
@@ -478,7 +476,7 @@ def wand_topk(
                     )
                     ne_parts = _decode_and_score(
                         ne_decode.select("term", "w_idf", "n", "docids", "tfs", "dls"),
-                        avgdl, k1, b,
+                        avgdl,
                     )
                     ne_kept = ne_parts.join(
                         e_parts.select("docID").distinct(), "docID", "left_semi"

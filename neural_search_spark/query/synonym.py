@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neural_search_spark import B, K1
 from neural_search_spark.query.bm25 import bm25_score_col, idf_col, topk
 
 
@@ -40,8 +39,6 @@ def synonym_score_all(
     meta: DataFrame,
     groups: list[list[str]],
     boosts: list[float] | None = None,
-    k1: float = K1,
-    b: float = B,
     prefilter: DataFrame | None = None,
 ) -> DataFrame:
     """(docID, score): BM25 where each synonym group scores as one
@@ -104,7 +101,7 @@ def synonym_score_all(
         (
             F.col("w")
             * idf_col(F.col("gdf"), F.lit(n_docs))
-            * bm25_score_col(F.col("gtf").cast("double"), F.col("dl"), F.lit(avgdl), k1, b)
+            * bm25_score_col(F.col("gtf").cast("double"), F.col("dl"), F.lit(avgdl))
         ).alias("part"),
     )
     return scored.groupBy("docID").agg(F.sum("part").alias("score"))

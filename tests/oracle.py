@@ -75,3 +75,45 @@ def sparse_linear_scores(
         if s > 0:
             out[d] = s
     return out
+
+
+def _idf(n: int, df: int) -> float:
+    return math.log(1 + (n - df + 0.5) / (df + 0.5))
+
+
+def synonym_scores(docs: dict[int, str], groups: list[list[str]]) -> dict[int, float]:
+    """Lucene SynonymQuery: each group scores as one pseudo-term with
+    df = max member df and tf = Σ member tf (unit boosts)."""
+    postings, doclens, n, avgdl = build_oracle_index(docs)
+    scores: dict[int, float] = {}
+    for g in groups:
+        members = [t for t in g if t in postings]
+        if not members:
+            continue
+        idf = _idf(n, max(len(postings[t]) for t in members))
+        gtf: dict[int, int] = {}
+        for t in members:
+            for d, tf in postings[t].items():
+                gtf[d] = gtf.get(d, 0) + tf
+        for d, tf in sorted(gtf.items()):
+            comp = tf / (tf + K1 * (1 - B + B * doclens[d] / avgdl))
+            scores[d] = scores.get(d, 0.0) + idf * comp
+    return scores
+
+
+def mlt_terms(
+    docs: dict[int, str], like: list[int], max_query_terms: int,
+    min_term_freq: int, min_doc_freq: int,
+) -> list[str]:
+    """more_like_this term selection: the example docs' terms with
+    Σtf ≥ min_term_freq and df ≥ min_doc_freq, by tf·idf desc, term asc."""
+    postings, _, n, _ = build_oracle_index(docs)
+    tf: Counter = Counter()
+    for d in like:
+        tf.update(tokenize_py(docs[d]))
+    picked = [
+        (tf[t] * _idf(n, len(postings[t])), t)
+        for t in tf
+        if tf[t] >= min_term_freq and len(postings[t]) >= min_doc_freq
+    ]
+    return [t for _, t in sorted(picked, key=lambda p: (-p[0], p[1]))[:max_query_terms]]

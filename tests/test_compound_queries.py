@@ -90,6 +90,7 @@ def test_dis_max_fused_single_postings_scan(spark, transcripts, index_tables, tm
         if "FileScan parquet" in ln and "docID" in ln
     ]
     assert len(scans) == 1, plan
+    assert "In(term" in scans[0], plan
 
 
 def test_boosting_demotes_negative_matches(engine):
@@ -244,9 +245,11 @@ def test_terms_set_and_sqs_plan_locks(spark, transcripts, index_tables, tmp_path
     )
     scans, plan = postings_scans(r1)
     assert len(scans) == 1, plan
+    assert "In(term" in scans[0], plan
 
     r2 = eng.search(
         {"simple_query_string": {"query": "merge sort -vector"}}, k=5
     )
     scans, plan = postings_scans(r2)
     assert len(scans) == 1, plan
+    assert "In(term" in scans[0], plan

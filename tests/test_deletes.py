@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 
@@ -200,3 +201,168 @@ def test_fetch_returns_rank_order_across_docs_files(spark, tmp_path):
     fetched = store.fetch(hits).collect()
     assert [r["rank"] for r in fetched] == [1, 2, 3, 4]
     assert [(r["docID"], r["text"]) for r in fetched] == [(d, docs[d]) for d in picks]
+
+
+# --- every relational query kind honours tombstones before compact() -----
+
+MATCH = {"match": {"text": "the data spark"}}
+SUB_A = {"match": {"text": "the data"}}
+SUB_B = {"match": {"text": "spark"}}
+BOOL_SHOULD = [{"match": {"text": "spark the"}}]
+BOOL_NOT = [{"term": {"text": {"value": "heap"}}}]
+SYN_GROUPS = [["data", "spark"], ["the"]]
+MLT = {"max_query_terms": 8, "min_term_freq": 1, "min_doc_freq": 2}
+ALL = 100  # > corpus size: every match comes back, ranking is not at issue
+
+
+def _min_max(scores: dict[int, float]) -> dict[int, float]:
+    lo, hi = min(scores.values()), max(scores.values())
+    if lo == hi:
+        return {d: 1.0 for d in scores}
+    return {d: (s - lo) / (hi - lo) or 0.001 for d, s in scores.items()}
+
+
+def _tombstone_cases(docs, example):
+    """kind → (run(store, engine) → {docID: score}, expected(deleted) →
+    the oracle's {docID: score} with stats over all of `docs` and the
+    `deleted` docs excluded)."""
+    postings, *_ = oracle.build_oracle_index(docs)
+
+    def bm25(terms):
+        return oracle.bm25_scores(docs, terms)
+
+    def live(scores):
+        return lambda deleted: {d: s for d, s in scores.items() if d not in deleted}
+
+    def hits(df):
+        return {r["docID"]: r["score"] for r in df.collect()}
+
+    def search(q):
+        return lambda store, eng: hits(eng.search(q, k=ALL))
+
+    def at_least(terms, n):
+        return {
+            d: s for d, s in bm25(terms).items()
+            if sum(d in postings.get(t, {}) for t in terms) >= n
+        }
+
+    def bool_scores():
+        must, should = bm25(["data"]), bm25(["spark", "the"])
+        return {
+            d: s + should.get(d, 0.0) for d, s in must.items()
+            if d not in postings.get("heap", {})
+        }
+
+    def dis_max_scores(tie):
+        a, b = bm25(["the", "data"]), bm25(["spark"])
+        out = {}
+        for d in set(a) | set(b):
+            subs = [m[d] for m in (a, b) if d in m]
+            out[d] = max(subs) + tie * (sum(subs) - max(subs))
+        return out
+
+    def hybrid_expected(deleted):
+        # sub-query lists hold LIVE docs only, so normalization never sees
+        # a deleted doc
+        a, b = (
+            _min_max(live(bm25(t))(deleted)) for t in (["the", "data"], ["spark"])
+        )
+        return {d: (a.get(d, 0.0) + b.get(d, 0.0)) / 2 for d in set(a) | set(b)}
+
+    mlt_terms = oracle.mlt_terms(docs, [example], **MLT)
+    fused_bool = {"bool": {"must": [{"match": {"text": "data"}}],
+                           "should": BOOL_SHOULD, "must_not": BOOL_NOT}}
+    # a nested bool is not a lexical clause: forces the composed plan
+    composed_bool = {"bool": {"must": [{"bool": {"must": [{"match": {"text": "data"}}]}}],
+                              "should": BOOL_SHOULD, "must_not": BOOL_NOT}}
+    return {
+        "match": (search(MATCH), live(bm25(QUERY))),
+        "term": (search({"term": {"text": {"value": "data"}}}), live(bm25(["data"]))),
+        "match_msm": (
+            search({"match": {"text": {"query": "the data spark", "minimum_should_match": 2}}}),
+            live(at_least(QUERY, 2)),
+        ),
+        "terms_set": (
+            search({"terms_set": {"text": {"terms": QUERY, "minimum_should_match": 2}}}),
+            live(at_least(QUERY, 2)),
+        ),
+        "bool_fused": (search(fused_bool), live(bool_scores())),
+        "bool_composed": (search(composed_bool), live(bool_scores())),
+        "dis_max": (
+            search({"dis_max": {"queries": [SUB_A, SUB_B], "tie_breaker": 0.3}}),
+            live(dis_max_scores(0.3)),
+        ),
+        "hybrid": (search({"hybrid": {"queries": [SUB_A, SUB_B]}}), hybrid_expected),
+        "synonym": (
+            search({"synonym": {"field": "text", "groups": SYN_GROUPS}}),
+            live(oracle.synonym_scores(docs, SYN_GROUPS)),
+        ),
+        "more_like_this": (
+            search({"more_like_this": {"field": "text", "like": [example], **MLT}}),
+            live({d: s for d, s in bm25(mlt_terms).items() if d != example}),
+        ),
+        "prefix_scoring_boolean": (
+            search({"prefix": {"text": {"value": "spa", "rewrite": "scoring_boolean"}}}),
+            live(bm25([t for t in postings if t.startswith("spa")])),
+        ),
+        "msearch": (
+            lambda store, eng: hits(
+                eng.msearch([{"term": {"text": {"value": "spark"}}}, MATCH], k=ALL)
+                .where("query_id = 1")
+            ),
+            live(bm25(QUERY)),
+        ),
+        "store_topk_relational": (
+            lambda store, eng: hits(store.topk(QUERY, k=ALL, strategy="relational")),
+            live(bm25(QUERY)),
+        ),
+    }
+
+
+TOMBSTONE_KINDS = [
+    "match", "term", "match_msm", "terms_set", "bool_fused", "bool_composed",
+    "dis_max", "hybrid", "synonym", "more_like_this", "prefix_scoring_boolean",
+    "msearch", "store_topk_relational",
+]
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark, tmp_path_factory):
+    """A store whose two best docs for QUERY are deleted but not compacted,
+    its DSL engine, and the oracle cases over the whole-index docs."""
+    path = str(tmp_path_factory.mktemp("tombstoned") / "idx")
+    store = _build(spark, path)
+    docs = _docs_on_disk(spark, path)
+    ranked = [d for d, _ in oracle.topk(oracle.bm25_scores(docs, QUERY), 3)]
+    victims, example = ranked[:2], ranked[2]
+    cases = _tombstone_cases(docs, example)
+    assert store.delete_docs(victims) == 2
+    return store, store.query_engine(), set(victims), cases
+
+
+@pytest.mark.parametrize("kind", TOMBSTONE_KINDS)
+def test_query_kinds_exclude_tombstoned_docs(tombstoned, kind):
+    store, eng, victims, cases = tombstoned
+    run, expected_after = cases[kind]
+    # the delete matters for this kind: a victim matched before it
+    assert victims & set(expected_after(set())), kind
+    expected = expected_after(victims)
+    got = run(store, eng)
+    assert set(got) == set(expected), kind
+    for d, s in expected.items():
+        assert got[d] == pytest.approx(s, rel=1e-9), (kind, d)
+
+
+def test_tombstone_anti_join_keeps_term_pushdown(tombstoned):
+    """Deletes apply below the query: the term IN filter still reaches the
+    postings scan under the tombstone anti-join, on both read paths."""
+    store, eng, _, _ = tombstoned
+    for df in (store.topk(QUERY, k=5), eng.search(MATCH, k=5)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        scans = [
+            ln for ln in plan.splitlines()
+            if "FileScan parquet" in ln and re.search(r"ReadSchema: struct<[^>]*\btf:", ln)
+        ]
+        assert len(scans) == 1, plan
+        assert "In(term" in scans[0], plan
+        assert "LeftAnti" in plan, plan

@@ -68,9 +68,49 @@ def test_dsl_never_leaks_raw_errors(fuzz_engine):
             leaks.append((q, type(e).__name__, str(e)[:60]))
         except Py4JError as e:  # pragma: no cover
             leaks.append((q, "Py4J", str(e)[:60]))
+    # msearch: a random entry beside a batchable one — malformed or
+    # non-lexical entries take the per-query fallback, whose search()
+    # must raise the same validation errors
+    for trial in range(40):
+        batch = [{"match": {"text": "alpha"}}, {rng.choice(KINDS): rng.choice(VALUES)}]
+        try:
+            fuzz_engine.msearch(batch, k=3).collect()
+        except (QueryValidationError, ValueError):
+            pass
+        except (KeyError, TypeError, AttributeError) as e:
+            leaks.append((batch, type(e).__name__, str(e)[:60]))
     # a soft budget: malformed input should overwhelmingly map to the
     # validation error; raw leaks indicate missing parse guards
     assert not leaks, leaks[:5]
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [None, "alpha", [], {}, {"match": "alpha"}, {"match": {"text": {}}},
+     {"term": {"text": {"boost": 2.0}}}, {"match": {"text": "alpha"}, "term": {"text": "beta"}}],
+)
+def test_msearch_malformed_entry_raises_validation_error(fuzz_engine, entry):
+    with pytest.raises(QueryValidationError):
+        fuzz_engine.msearch([{"term": {"text": "beta"}}, entry], k=3).collect()
+
+
+def test_msearch_batches_msm_one_like_search(fuzz_engine):
+    """minimum_should_match ≤ 1 is a plain disjunction: msearch takes the
+    one-scan batch path for it and returns what per-query search() does;
+    an empty analyzed query still falls back to search()."""
+    qs = [
+        {"match": {"text": {"query": "alpha tok3 tok5", "minimum_should_match": 1}}},
+        {"term": {"text": {"value": "tok2", "boost": 2.0}}},
+    ]
+    got = fuzz_engine.msearch(qs, k=3).orderBy("query_id", "rank").collect()
+    exp = [
+        (qid, r["rank"], r["docID"])
+        for qid, q in enumerate(qs)
+        for r in fuzz_engine.search(q, k=3).collect()
+    ]
+    assert [(r["query_id"], r["rank"], r["docID"]) for r in got] == exp
+    empty = fuzz_engine.msearch([{"match": {"text": "..."}}], k=3)
+    assert empty.count() == 0
 
 
 @pytest.mark.parametrize("dec", ["6", 1.5, 6.0, -1, True, [6], {"v": 6}])

@@ -4,6 +4,7 @@ semantics), DSL queries, sparse quantization, rerank, multimodal plumbing."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -878,6 +879,7 @@ def test_dsl_hybrid_fused_single_postings_scan(spark, transcripts, index_tables,
         if "FileScan parquet" in ln and "docID" in ln
     ]
     assert len(data_scans) == 1, plan
+    assert "In(term" in data_scans[0], plan
     assert res.count() == 10
 
     # SORTED hybrid keeps the same single fused scan: the sort-key join and
@@ -896,7 +898,72 @@ def test_dsl_hybrid_fused_single_postings_scan(spark, transcripts, index_tables,
         if "FileScan parquet" in ln and "tf" in ln
     ]
     assert len(postings_scans2) == 1, plan2
+    assert "In(term" in postings_scans2[0], plan2
     assert res2.count() == 10
+
+
+@pytest.fixture(scope="module")
+def parquet_tables(spark, index_tables, tmp_path_factory):
+    """index_tables with the postings read back from parquet, so plans
+    show the scan and its pushed filters."""
+    from neural_search_spark.index.build import IndexTables
+
+    p = str(tmp_path_factory.mktemp("plan_lock") / "postings")
+    index_tables.postings.write.parquet(p)
+    return IndexTables(
+        postings=spark.read.parquet(p),
+        doclens=index_tables.doclens,
+        term_stats=index_tables.term_stats,
+        meta=index_tables.meta,
+    )
+
+
+def _scorer_frame(spark, t, caller):
+    from neural_search_spark.query import batch, boolquery, bm25
+
+    tables = (t.postings, t.doclens, t.term_stats, t.meta)
+    if caller == "bm25_score_all":
+        return bm25.bm25_score_all(*tables, ["the", "data", "spark"])
+    if caller == "bm25_score_batch":
+        q = spark.createDataFrame(
+            [(1, "the", 1.0), (1, "data", 1.0), (2, "spark", 2.0)],
+            "query_id long, term string, weight double",
+        )
+        return batch.bm25_score_batch(*tables, q)
+    if caller == "fused_subquery_scores_batch":
+        q = spark.createDataFrame(
+            [(1, 0, "the", 1.0), (1, 1, "data", 1.0), (2, 0, "spark", 1.0), (2, 1, "cache", 1.0)],
+            "query_id long, subquery_idx int, term string, weight double",
+        )
+        return batch.fused_subquery_scores_batch(*tables, q)
+    if caller == "fused_bm25_subquery_parts":
+        return H.fused_bm25_subquery_parts(t, [{"the": 1.0, "data": 1.0}, ["spark"]])
+    return boolquery.fused_bool_scores(
+        *tables, [{"data": 1.0}], [{"spark": 1.0, "the": 1.0}], [{"heap": 1.0}]
+    )
+
+
+@pytest.mark.parametrize(
+    "caller",
+    ["bm25_score_all", "bm25_score_batch", "fused_subquery_scores_batch",
+     "fused_bm25_subquery_parts", "fused_bool_scores"],
+)
+def test_shared_scorer_single_pushed_postings_scan(spark, parquet_tables, caller):
+    """Plan lock for the one BM25 term-scoring primitive (bm25.bm25_parts)
+    under each of its callers: exactly one postings scan, carrying the
+    query terms as a pushed IN filter; a single query broadcasts its term
+    relation into the postings join."""
+    df = _scorer_frame(spark, parquet_tables, caller)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = [
+        ln for ln in plan.splitlines()
+        if "FileScan parquet" in ln and "docID" in ln
+    ]
+    assert len(scans) == 1, plan
+    assert re.search(r"PushedFilters: \[[^\]]*In\(term", scans[0]), plan
+    if "batch" not in caller:
+        assert "BroadcastExchange" in plan, plan
+    assert df.count() > 0
 
 
 def test_bm25_batch_matches_per_query(spark, index_tables):
