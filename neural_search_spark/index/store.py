@@ -42,6 +42,7 @@ from neural_search_spark.index.build import (
 )
 from neural_search_spark.index.codec import CODEC_VERSION
 from neural_search_spark.index.segments import build_segments, shard_col
+from neural_search_spark.session import local_frame
 
 STAGES = ["docs", "postings", "doclens", "term_stats", "segments"]
 
@@ -278,9 +279,7 @@ class IndexStore:
         if isinstance(doc_ids, DataFrame):
             ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("docID"))
         else:
-            ids = self.spark.createDataFrame(
-                [(int(d),) for d in doc_ids], "docID long"
-            )
+            ids = local_frame(self.spark, [(int(d),) for d in doc_ids], "docID long")
         # count only genuinely-live deletions (bounded: one aggregate job)
         prev = self.tombstones
         new = ids.distinct()

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from neural_search_spark import B, K1
+from neural_search_spark.session import local_frame
 
 # below this many distinct query terms, a DataFrame batch's term list is
 # collected to the driver and pushed into the parquet scan as an IN-list
@@ -71,7 +72,7 @@ def query_terms_df(
         rows = [(t, float(terms[t]), int(counts.get(t, 1))) for t in sorted(terms)]
     else:
         rows = [(t, 1.0, int(counts.get(t, 1))) for t in sorted(set(terms))]
-    return spark.createDataFrame(rows, "term string, weight double, q_clauses int")
+    return local_frame(spark, rows, "term string, weight double, q_clauses int")
 
 
 def _inlist_pruned(table: DataFrame, queries: DataFrame, term_col: str = "term") -> DataFrame:

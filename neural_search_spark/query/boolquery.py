@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neural_search_spark.query.bm25 import bm25_parts
+from neural_search_spark.session import local_frame
 
 MAX_BOOL_CLAUSES = 63  # single int64 bitmask; Lucene's own cap is 1024
 
@@ -93,10 +94,10 @@ def fused_bool_scores(
                 weight[t] = weight.get(t, 0.0) + float(wt)
             mask[t] = mask.get(t, 0) | (1 << i)
     if not mask:
-        return postings.sparkSession.createDataFrame([], "docID long, score double")
+        return local_frame(postings.sparkSession, [], "docID long, score double")
 
     qrows = [(t, weight.get(t, 0.0), mask[t]) for t in sorted(mask)]
-    q = postings.sparkSession.createDataFrame(qrows, "term string, weight double, q_mask long")
+    q = local_frame(postings.sparkSession, qrows, "term string, weight double, q_mask long")
     per_doc = bm25_parts(
         postings, doclens, term_stats, meta, q, carry=("q_mask",),
         inlist=sorted(mask), prefilter=prefilter,

@@ -108,6 +108,7 @@ from neural_search_spark.query.sparse import (
     MAX_WINDOW_SIZE,
     PRUNE_RATIO,
 )
+from neural_search_spark.session import local_frame
 
 MAX_SUBQUERIES = 5
 
@@ -1380,8 +1381,8 @@ class QueryEngine:
                 for qid, weights in enumerate(parsed)
                 for t, w in sorted(weights.items())
             ]
-            qdf = self.docs.sparkSession.createDataFrame(
-                rows, "query_id long, term string, weight double"
+            qdf = local_frame(
+                self.docs.sparkSession, rows, "query_id long, term string, weight double"
             )
             return bm25_topk_batch(
                 self.tables.postings, self.tables.doclens, self.tables.term_stats,

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from neural_search_spark.index.build import IndexTables
 from neural_search_spark.query.bm25 import bm25_parts, per_key_topk, topk
+from neural_search_spark.session import local_frame
 
 MIN_SCORE = 0.001  # MinMaxScoreNormalizationTechnique.java:26
 MAX_SUBQUERIES = 5  # HybridQueryBuilder.java:56
@@ -88,8 +89,8 @@ def fused_bm25_subquery_parts(
             sorted(terms.items()) if isinstance(terms, dict) else [(t, 1.0) for t in sorted(set(terms))]
         )
         rows.extend((idx, t, float(w)) for t, w in pairs)
-    q = index.postings.sparkSession.createDataFrame(
-        rows, "subquery_idx int, term string, weight double"
+    q = local_frame(
+        index.postings.sparkSession, rows, "subquery_idx int, term string, weight double"
     )
     return bm25_parts(
         index.postings, index.doclens, index.term_stats, index.meta, q,

@@ -63,6 +63,7 @@ from pyspark.sql import types as T
 
 from neural_search_spark import B, K1
 from neural_search_spark.index.codec import decode_blocks_batch
+from neural_search_spark.session import local_frame
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -237,7 +238,7 @@ def wand_topk(
             if t in dfs
         }
         if not w_idf:
-            return spark.createDataFrame([], "rank long, docID long, score double")
+            return local_frame(spark, [], "rank int, docID long, score double")
         n_total = sum(int(r["nblocks"]) for r in agg_rows)
         n_wide = sum(int(r["nwide"]) for r in agg_rows)
         gmax = {
@@ -523,7 +524,7 @@ def wand_topk(
                     "rescue_candidates": 0,
                 }
             )
-        return spark.createDataFrame(rows, "rank int, docID long, score double")
+        return local_frame(spark, rows, "rank int, docID long, score double")
     finally:
         if persisted:
             qmeta.unpersist()

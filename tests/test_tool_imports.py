@@ -55,6 +55,23 @@ def test_script_engine_imports_resolve(path):
     assert not missing, missing
 
 
+def test_session_daemon_module_resolves():
+    # the JVM starts this module by name on the first Python task, so a
+    # rename would otherwise fail only there
+    modules = [
+        node.args[1].value
+        for node in ast.walk(ast.parse((ROOT / "neural_search_spark" / "session.py").read_text()))
+        if isinstance(node, ast.Call)
+        and len(node.args) == 2
+        and all(isinstance(a, ast.Constant) for a in node.args)
+        and node.args[0].value == "spark.python.daemon.module"
+    ]
+    assert len(modules) == 1, modules
+    spec = importlib.util.find_spec(modules[0])
+    assert spec is not None, modules[0]
+    assert 'if __name__ == "__main__":' in Path(spec.origin).read_text(), spec.origin
+
+
 def test_guard_sees_function_level_imports():
     # the guard must reach imports nested inside main(), not only the
     # module top level
